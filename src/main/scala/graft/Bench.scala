@@ -55,47 +55,45 @@ object Bench {
   private[graft] def appJar: String =
     Bench.getClass.getProtectionDomain.getCodeSource.getLocation.getPath
 
+  /** Spark settings of every measured session at `cores` total cores. Pure
+    * so BenchLaunchSpec can pin each value; perfbench's `Main.session`
+    * pins the same values where it sets the same key.
+    */
+  private[graft] def sessionConf(cores: Int, execMem: String): Seq[(String, String)] = Seq(
+    // uniform per-cluster-size tuning rule at every level (Spark's own
+    // tuning guide: 2-4 tasks per core): partitions = 4 × total cores,
+    // 16 MiB file splits — constant split granularity like a real table
+    "spark.sql.shuffle.partitions" -> (4 * cores).toString,
+    "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.local.dir" -> s"$ShmRoot/local",
+    "spark.executor.cores" -> "1",
+    "spark.executor.memory" -> execMem,
+    "spark.cores.max" -> cores.toString,
+    // loopback cluster: locality waits only add idle time
+    "spark.locality.wait" -> "0",
+    "spark.io.compression.codec" -> "lz4",
+    // checkpoint blocks are stored deserialized (graft.util.Ckpt), so block
+    // compression has nothing to act on
+    "spark.rdd.compress" -> "false",
+    "spark.sql.parquet.compression.codec" -> "snappy",
+    "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+    // dynamic-partition writes: concurrent per-partition writers instead
+    // of the implicit sort-copy of every row into the sorter buffer
+    // (aligned write tasks carry ~1 bucket value each, so 8 writers never
+    // fall back; A/B'd at 4 cores: the write job sheds the row-copy pass)
+    "spark.sql.maxConcurrentOutputFileWriters" -> "8",
+    "spark.sql.adaptive.enabled" -> "true")
+
   private[graft] def session(master: String, cores: Int): SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(master)
       .config("spark.jars", if (appJar.endsWith(".jar")) appJar else "")
       .appName(s"graft-bench-$cores")
-      // uniform per-cluster-size tuning rule at every level (Spark's own
-      // tuning guide: 2-4 tasks per core): partitions = 4 × total cores,
-      // 16 MiB file splits — constant split granularity like a real table
-      .config("spark.sql.shuffle.partitions",
-        (sys.env.getOrElse("SPARK_GRAFT_PARTS_PER_CORE", "4").toInt * cores).toString)
-      .config("spark.sql.files.maxPartitionBytes",
-        (sys.env.getOrElse("SPARK_GRAFT_SPLIT_MB", "16").toLong * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$ShmRoot/local")
-      .config("spark.executor.cores", "1")
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "4g"))
-      .config("spark.cores.max", cores.toString)
-      // loopback cluster: locality waits only add idle time
-      .config("spark.locality.wait", "0")
-      // trade CPU (scales with cores) for memory-bus bytes (doesn't):
-      // compression codec knobs for shuffle/persist and parquet output
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
-      // only meaningful with SPARK_GRAFT_CKPT_SER=1 A/B runs (serialized
-      // checkpoint blocks — measured slower, see graft.util.Ckpt)
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "false"))
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // dynamic-partition writes: concurrent per-partition writers instead
-      // of the implicit sort-copy of every row into the sorter buffer
-      // (aligned write tasks carry ~1 bucket value each, so 8 writers never
-      // fall back; A/B'd at 4 cores: the write job sheds the row-copy pass)
-      .config("spark.sql.maxConcurrentOutputFileWriters",
-        sys.env.getOrElse("SPARK_GRAFT_CCW", "8"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
+    sessionConf(cores, sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "4g"))
+      .foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     FuzzRatio.register(s)
     s
@@ -187,12 +185,54 @@ object Bench {
     s"$classes:/opt/spark/jars/*"
   }
 
+  /** Argv of every child JVM the bench starts: `taskset -c <pin> <java>
+    * [module opens] <jvm options> -cp <cp> <main class> <args>`, one method
+    * per launch. Pure; BenchLaunchSpec pins each launch token for token.
+    */
+  private[graft] final case class Launcher(javaExe: String, cp: String) {
+    def argv(pin: String, opens: Boolean, jvmOpts: Seq[String],
+        mainClass: String, args: Seq[String]): Seq[String] =
+      Seq("taskset", "-c", pin, javaExe) ++ (if (opens) jdk17AddOpens else Nil) ++
+        jvmOpts ++ Seq("-cp", cp, mainClass) ++ args
+
+    /** Standalone master/worker daemons (cluster mode). */
+    def daemon(pin: String, heap: String, mainClass: String,
+        mainArgs: Seq[String], sysProps: Seq[String]): Seq[String] =
+      argv(pin, opens = true, s"-Xmx$heap" +: sysProps, mainClass, mainArgs)
+
+    /** Clock spinner on cores [from, hi). */
+    def spinner(from: Int, hi: Int): Seq[String] = {
+      val n = hi - from
+      argv(s"$from-${hi - 1}", opens = false, Seq("-Xmx64m",
+        "-XX:+UseSerialGC", s"-XX:ActiveProcessorCount=$n"),
+        "graft.Spinner", Seq(n.toString))
+    }
+
+    def probe(pin: String, n: Int, aluOnly: Boolean): Seq[String] =
+      argv(pin, opens = false, Seq(s"-Xmx${256 * n + 512}m"), "graft.AluProbe",
+        n.toString +: (if (aluOnly) Seq("alu") else Nil))
+
+    def control(n: Int, runs: Int, pinned: Int): Seq[String] =
+      argv(s"0-${pinned - 1}", opens = true, Seq("-Xmx4g",
+        s"-XX:ActiveProcessorCount=${n + 1}", "-Dspark.ui.enabled=false"),
+        "graft.ComputeControl", Seq(n.toString, runs.toString))
+
+    def child(driverPin: String, heap: String, masterUrl: String, n: Int,
+        inputDir: String, warmDir: String, runs: Int,
+        abortSec: Double): Seq[String] =
+      argv(driverPin, opens = true, Seq(s"-Xmx$heap",
+        s"-XX:ActiveProcessorCount=${n + 1}", "-Dspark.ui.enabled=false",
+        "-Dspark.sql.session.timeZone=UTC"), "graft.BenchChild",
+        Seq(masterUrl, n.toString, inputDir, warmDir, runs.toString,
+          f"$abortSec%.3f"))
+  }
+
+  private lazy val launcher = Launcher(javaBin, classpath)
+
   private def spawn(pin: String, heap: String, mainClass: String,
       mainArgs: Seq[String], sysProps: Seq[String] = Nil): Process = {
-    val cmd = Seq("taskset", "-c", pin, javaBin) ++ jdk17AddOpens ++
-      Seq(s"-Xmx$heap") ++ sysProps ++
-      Seq("-cp", classpath, mainClass) ++ mainArgs
-    val pb = new ProcessBuilder(cmd: _*)
+    val pb = new ProcessBuilder(
+      launcher.daemon(pin, heap, mainClass, mainArgs, sysProps): _*)
     // the worker daemon composes executor commands from the SPARK_HOME
     // layout; SPARK_SCALA_VERSION short-circuits the dev-build-dir probe
     // (normally both come from load-spark-env.sh)
@@ -358,10 +398,7 @@ object Bench {
     val nSpin = hi - from
     if (!equalizeClock || nSpin <= 0) body
     else {
-      val cmd = Seq("taskset", "-c", s"$from-${hi - 1}", javaBin,
-        "-Xmx64m", "-XX:+UseSerialGC", s"-XX:ActiveProcessorCount=$nSpin",
-        "-cp", classpath, "graft.Spinner", nSpin.toString)
-      val pb = new ProcessBuilder(cmd: _*)
+      val pb = new ProcessBuilder(launcher.spinner(from, hi): _*)
       pb.redirectErrorStream(true)
       pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
       val p = pb.start()
@@ -426,11 +463,7 @@ object Bench {
     */
   private def probeClock(pin: String, n: Int,
       aluOnly: Boolean = false): (Double, Double) = {
-    val heap = s"${256 * n + 512}m"
-    val cmd = Seq("taskset", "-c", pin, javaBin, s"-Xmx$heap",
-      "-cp", classpath, "graft.AluProbe", n.toString) ++
-      (if (aluOnly) Seq("alu") else Nil)
-    val pb = new ProcessBuilder(cmd: _*)
+    val pb = new ProcessBuilder(launcher.probe(pin, n, aluOnly): _*)
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes())
@@ -656,11 +689,7 @@ object Bench {
 
   private def runControlPinned(n: Int, runs: Int, pinned: Int): Double = {
     val errFile = java.io.File.createTempFile(s"bench-ctrl-$n-", ".log")
-    val cmd = Seq("taskset", "-c", s"0-${pinned - 1}", javaBin) ++ jdk17AddOpens ++
-      Seq("-Xmx4g", s"-XX:ActiveProcessorCount=${n + 1}",
-        "-Dspark.ui.enabled=false", "-cp", classpath,
-        "graft.ComputeControl", n.toString, runs.toString)
-    val pb = new ProcessBuilder(cmd: _*)
+    val pb = new ProcessBuilder(launcher.control(n, runs, pinned): _*)
     pb.redirectError(errFile)
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes())
@@ -679,17 +708,9 @@ object Bench {
       inputDir: String, warmDir: String, runs: Int, probe: (Double, Double),
       abortSec: Double = 0.0): LevelResult = {
     val errFile = java.io.File.createTempFile(s"bench-child-$n-", ".log")
-    val extraOpts = sys.env.get("SPARK_GRAFT_CHILD_OPTS")
-      .map(_.split("\\s+").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val cmd = Seq("taskset", "-c", driverPin, javaBin) ++ jdk17AddOpens ++
-      extraOpts ++
-      Seq(s"-Xmx${sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "20g")}",
-        s"-XX:ActiveProcessorCount=${n + 1}",
-        "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC", "-cp", classpath,
-        "graft.BenchChild", masterUrl, n.toString, inputDir, warmDir,
-        runs.toString, f"$abortSec%.3f")
-    val pb = new ProcessBuilder(cmd: _*)
+    val pb = new ProcessBuilder(launcher.child(driverPin,
+      sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "20g"), masterUrl, n,
+      inputDir, warmDir, runs, abortSec): _*)
     pb.redirectError(errFile) // a pipe would deadlock on Spark's stderr logging
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes())
@@ -699,7 +720,7 @@ object Bench {
       t.substring(math.max(0, t.length - 4000))
     }
     require(rc == 0, s"bench child n=$n failed rc=$rc\n$errTail")
-    if (!sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) errFile.delete()
+    errFile.delete()
     val parsed = out.linesIterator.filter(_.startsWith("RUN ")).map { l =>
       val f = l.trim.split("\\s+") // RUN n total build write
       (f(1).toLong, Map(
@@ -818,7 +839,7 @@ object Bench {
     // (measured: 399 k t/s at 48×, 396 k at 96×) while the 1-vs-4 wall
     // ratio stops being depressed by the constant term
     // repl 128 (was 96, r3; 48 in r2): the fixed per-run costs (driver
-    // scheduling, AQE futures, warm gaps — TASKGAP ~2-5 s) weigh ~4x more
+    // scheduling, AQE futures, warm gaps — ~2-5 s of driver gap) weigh ~4x more
     // on the short 4-core side than the 1-core side, so a larger input
     // raises the measured wall ratio toward the true dataflow scaling
     // (measured: repl48 floors 0.665, repl96 floors 0.728 on the same box)
@@ -1447,59 +1468,12 @@ object BenchChild {
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (t.taskMetrics != null) taskMs.addAndGet(t.taskMetrics.executorRunTime)
     })
-    // SPARK_GRAFT_JOBLOG=1: per-job wall vs task time on stderr — the jobs
-    // where wall >> taskTime/cores are the serial/underparallelized culprits.
-    // Task INTERVALS are also collected so the run can report true driver-
-    // serial time as wall minus the union of task-busy intervals (per-job
-    // walls overlap under AQE's concurrent stage futures and cannot be
-    // summed).
-    val intervals = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null)
-            intervals.add((t.taskInfo.launchTime, t.taskInfo.finishTime))
-      })
-      val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      val jobTask = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-      val jobGc = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-      val jobName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobStart.put(j.jobId, System.nanoTime())
-          jobTask.put(j.jobId, new java.util.concurrent.atomic.AtomicLong)
-          jobGc.put(j.jobId, new java.util.concurrent.atomic.AtomicLong)
-          // result-stage name = the action's call site (e.g. "parquet at
-          // Materialize.scala:249") — identifies the job in the log
-          jobName.put(j.jobId, j.stageInfos.lastOption
-            .map(_.name.takeWhile(_ != '\n').take(70)).getOrElse("?"))
-          j.stageIds.foreach(s => stageJob.put(s, j.jobId))
-        }
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val jid = stageJob.get(t.stageId)
-          val acc = jobTask.get(jid)
-          if (acc != null && t.taskMetrics != null) {
-            acc.addAndGet(t.taskMetrics.executorRunTime)
-            jobGc.get(jid).addAndGet(t.taskMetrics.jvmGCTime)
-          }
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = jobStart.getOrDefault(j.jobId, 0L)
-          val tt = Option(jobTask.get(j.jobId)).map(_.get).getOrElse(0L)
-          val gc = Option(jobGc.get(j.jobId)).map(_.get).getOrElse(0L)
-          System.err.println(f"JOB ${j.jobId}%3d wall ${(System.nanoTime() - t0) / 1e9}%7.3f task ${tt / 1000.0}%7.2f gc ${gc / 1000.0}%6.2f  ${jobName.getOrDefault(j.jobId, "?")}")
-        }
-      })
-    }
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
     val tStart = System.nanoTime()
     val (stages, tBuild) =
-      timed(graft.pipeline.Pipeline.build(spark, spark.read.parquet(inputDir),
-        linkStagingDir = sys.env.get("SPARK_GRAFT_LINK_STAGING")
-          .filter(_ == "1").map(_ => s"${Bench.ShmRoot}/stage-${System.nanoTime()}")))
+      timed(graft.pipeline.Pipeline.build(spark, spark.read.parquet(inputDir)))
     // FUSED one-pass graph write: the compact triple plan executes exactly
     // once, dedup rides the write-aligned exchange (the run's ONLY
     // corpus-sized shuffle — key strings are never shuffled), and the node
@@ -1509,24 +1483,9 @@ object BenchChild {
     // total file count stays fixed per level — file count must NOT scale
     // with cores (see Materialize.alignedForWrite)
     val (n, tWrite) = timed(graft.materialize.Materialize.writeGraphFused(
-      spark, wh, stages.canonicalCompact,
-      nBuckets = sys.env.getOrElse("SPARK_GRAFT_NBUCKETS", "64").toInt))
+      spark, wh, stages.canonicalCompact, nBuckets = 64))
     val total = (System.nanoTime() - tStart) / 1e9
     System.err.println(f"TASKTIME ${taskMs.get / 1000.0}%.2f wall $total%.2f")
-    if (!intervals.isEmpty) {
-      // union of task-busy intervals → GAP = wall with zero tasks running
-      // (the honest driver-serial number; overlapped AQE job walls are not)
-      import scala.jdk.CollectionConverters._
-      val sorted = intervals.asScala.toSeq.sortBy(_._1)
-      var covered = 0L; var curS = sorted.head._1; var curE = sorted.head._2
-      sorted.tail.foreach { case (s, e) =>
-        if (s > curE) { covered += curE - curS; curS = s; curE = e }
-        else if (e > curE) curE = e
-      }
-      covered += curE - curS
-      System.err.println(
-        f"TASKGAP ${total - covered / 1000.0}%.2f covered ${covered / 1000.0}%.2f wall $total%.2f")
-    }
     (n, total, tBuild, tWrite)
   }
 
@@ -1700,22 +1659,6 @@ object AluProbe {
     // Bench runs next to each spun sample) — skip the memory pass
     if (!args.lift(1).contains("alu"))
       println(f"MEM $n ${measureMem(n)}%.2f")
-  }
-}
-
-/** Standalone input prep for A/B profiling: materializes the same replicated
-  * bench input `graft.Bench` prepares (untimed), WITHOUT running the bench —
-  * so pinned `BenchChild` variants can be launched directly against one
-  * shared input. Usage: BenchPrep [sfDir] [repl].
-  */
-object BenchPrep {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val repl = args.lift(1).map(_.toInt)
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_BENCH_REPL", "96").toInt)
-    val (dir, warm) = Bench.prepareInput(sfDir, repl)
-    println(s"PREP $dir $warm")
   }
 }
 

@@ -35,12 +35,7 @@ object Pipeline {
       canonical: DataFrame,
       canonicalCompact: DataFrame)
 
-  /** `observeLink` lets callers attach `observe()` metrics to the link
-    * output BEFORE it is checkpointed/consumed, so the counters ride the
-    * pipeline's own first action with zero extra passes (GraftApp uses
-    * this; default = no instrumentation).
-    *
-    * `linkStagingDir`: the linked-mentions intermediate feeds three
+  /** `linkStagingDir`: the linked-mentions intermediate feeds three
     * consumers. By default it is held as a lazy `localCheckpoint` —
     * right for single-box scale, but its blocks live in executor storage.
     * At 10^12 rows pass a staging dir instead: the intermediate becomes a
@@ -48,7 +43,6 @@ object Pipeline {
     * each consumer re-reads — the cluster-scale form of the same seam.
     */
   def build(spark: SparkSession, turns: DataFrame,
-      observeLink: DataFrame => DataFrame = identity,
       linkStagingDir: Option[String] = None): Stages = {
     // The raw-turn scan + regex evaluation is the dominant extract cost at
     // corpus scale — run it ONCE: the wide one-pass mention table
@@ -89,8 +83,8 @@ object Pipeline {
     val speakersZ = Link.zaakEntityCarry(Extract.speakersWithCaseFrom(wide),
       Dict.zakenDf(spark), Dict.dossiersDf(spark), Dict.documentsDf(spark))
       .drop("z_score")
-    val linkedRaw = observeLink(Link.linkPersons(speakersZ, Dict.personsDf(spark),
-      carry = Seq("z_entity_id", "z_match_type")))
+    val linkedRaw = Link.linkPersons(speakersZ, Dict.personsDf(spark),
+      carry = Seq("z_entity_id", "z_match_type"))
     // Same pruning for the linked checkpoint: `score` and `fractie_id` are
     // dead past the link stage (triples build MEMBER_OF from the persons
     // dim; canonicalize reads surname/persoon columns; GraftApp's counters

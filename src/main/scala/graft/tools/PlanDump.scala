@@ -14,6 +14,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [time|plan]
   *        [queryNameFilter...]
   *
+  * One query's plan and timing: `PlanDump <sfDir> <outDir> <suffix> time
+  * <queryName>` (writes the formatted plan, prints two timed runs).
+  *
   * Separate main from `graft.Bench` (the driver-contract bench is frozen);
   * this is the §1.4 isolation harness the round's evidence cites.
   */
@@ -27,8 +30,7 @@ object PlanDump {
 
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("PLANDUMP_PARTS", "64"))
+      .config("spark.sql.shuffle.partitions", "64")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", "/dev/shm/graft-plandump")

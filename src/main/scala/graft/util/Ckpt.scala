@@ -16,19 +16,14 @@ import org.apache.spark.storage.StorageLevel
   * repl-128): serialized walls 67.3/70.9/71.4 s vs deserialized
   * 60.9/62.6 s (+10–15%, task time +15–40 s). Checkpointed rows are
   * already UnsafeRow byte arrays, so the serializer pass buys almost no
-  * byte reduction and its copy cost lands in BOTH scaling levels.
-  * Deserialized `MEMORY_AND_DISK` stays the default;
-  * `SPARK_GRAFT_CKPT_SER=1` re-enables the serialized level for A/B runs.
+  * byte reduction and its copy cost lands in BOTH scaling levels. The
+  * level is therefore deserialized `MEMORY_AND_DISK`.
   */
 object Ckpt {
-
-  def level: StorageLevel =
-    if (sys.env.get("SPARK_GRAFT_CKPT_SER").contains("1"))
-      StorageLevel.MEMORY_AND_DISK_SER
-    else StorageLevel.MEMORY_AND_DISK
 
   /** Lazy local checkpoint at the policy's storage level: same plan
     * truncation + recompute-avoidance as `localCheckpoint(false)`.
     */
-  def apply(df: DataFrame): DataFrame = df.localCheckpoint(false, level)
+  def apply(df: DataFrame): DataFrame =
+    df.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
 }

@@ -16,7 +16,8 @@ import graft.synth.Dict
   *    corpus-sized sort-merge join or fact-side exchange appears.
   *
   * Complements MaterializeCheckpointSpec's PartitionFilters assertion on
-  * the upsert read path.
+  * the upsert read path. The last three tests pin the round-6 plan wins
+  * (before/after plans in `plans/r06/`) on the declared queries.
   */
 class PlanShapeSpec extends SparkSpec {
   import spark.implicits._
@@ -73,5 +74,49 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("Broadcast"), s"no broadcast join in canonical plan:\n$p")
     assert(!p.contains("SortMergeJoin"), s"sort-merge join in canonical plan:\n$p")
     assert(!p.contains("ShuffledHashJoin"), s"shuffled join in canonical plan:\n$p")
+  }
+
+  /** Operator nodes named `op` in an executedPlan tree string. */
+  private def nodes(p: String, op: String): Int =
+    p.linesIterator.map(_.dropWhile(" :+-".contains(_)))
+      .count(l => l == op || l.startsWith(op + " "))
+
+  private lazy val documents = Seq(
+    (1L, "the cat sat on the mat by the door"),
+    (2L, "the cat sat on the mat by the"),
+    (3L, "an unrelated sentence about parliament votes")).toDF("doc_id", "text")
+
+  private lazy val embeddings = (1 to 6).map { i =>
+    (i.toLong, Array.tabulate(64)(j => ((i * 31 + j * 17) % 13 - 6).toDouble))
+  }.toDF("vec_id", "embedding")
+
+  // the operator calls behind td_dup_shingle_ratio / td_ngram_jaccard_pairs
+  test("shingle kernel has no Window or Sort; its consumers sort only for the final ORDER BY") {
+    val sh = plan(graft.dataops.Dedup.shingles(documents))
+    assert(nodes(sh, "Window") == 0 && nodes(sh, "Sort") == 0, s"shingle plan:\n$sh")
+    Seq(graft.dataops.Dedup.dupShingleRatio(documents).orderBy("doc_id"),
+      graft.dataops.Dedup.ngramJaccardPairs(documents, 800, 100).orderBy("doc_a", "doc_b"))
+      .map(plan).foreach { p =>
+        assert(nodes(p, "Window") == 0, s"Window in a shingle consumer:\n$p")
+        assert(nodes(p, "Sort") == 1, s"a shingle consumer sorts more than its ORDER BY:\n$p")
+      }
+  }
+
+  // kg_relmap_edges: REL_MAP edges over the expanded turn entity
+  test("REL_MAP edge extraction scans its parent once") {
+    val p = plan(graft.triples.RelMap.edges(
+      graft.extract.Expand.withAttachments(spark.read.parquet(turnsPath)),
+      graft.triples.RelMap.TurnRels))
+    assert(nodes(p, "FileScan") == 1, s"REL_MAP scans:\n$p")
+  }
+
+  // td_ann_topk / td_embed_dup_pairs
+  test("ANN pair projections use the cosine_sim kernel, not zip_with lambdas") {
+    Seq(graft.dataops.Similarity.bruteForceTopK(embeddings, 5),
+      graft.dataops.Dedup.embeddingDupPairs(embeddings, 900000L,
+        SparkEntry.AnnBits, SparkEntry.AnnTables)).map(plan).foreach { p =>
+      assert(p.contains("cosine_sim"), s"no cosine_sim:\n$p")
+      assert(!p.contains("zip_with"), s"zip_with in an ANN plan:\n$p")
+    }
   }
 }
