@@ -77,11 +77,12 @@ object GraftApp {
 
     val stages = Pipeline.build(spark, turns,
       linkStagingDir = opts.get("staging").filter(_.nonEmpty))
-    // initial (cluster-sized) load: the FUSED one-exchange write over the
-    // compact derivation — dedup rides the write-aligned shuffle, key
-    // strings never shuffle, node table derives from compact blocks, and
-    // the edge count comes back from write metadata (no separate count
-    // pass). Incremental loads keep the string canonical + upsert path.
+    // one canonical derivation, two writers: the initial (cluster-sized)
+    // load writes the compact rows with the FUSED one-exchange write —
+    // dedup rides the write-aligned shuffle, key strings never shuffle,
+    // node table derives from compact blocks, and the edge count comes
+    // back from write metadata (no separate count pass). Incremental loads
+    // upsert the decoded string view of the same rows.
     val nTriples =
       if (!Materialize.graphExists(spark, warehouse))
         Materialize.writeGraphFused(spark, warehouse, stages.canonicalCompact)
@@ -90,7 +91,7 @@ object GraftApp {
         // for every materialize action (no Catalyst re-run per action)
         val canonical = stages.canonical.localCheckpoint(false)
         val n = canonical.count()
-        Materialize.writeGraph(spark, warehouse, canonical, triplesDistinct = true)
+        Materialize.writeGraph(spark, warehouse, canonical)
         n
       }
     Checkpoint.recordProcessed(spark, lineage, runId, "pipeline", turns, "conv_id",

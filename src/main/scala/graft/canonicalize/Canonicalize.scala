@@ -86,13 +86,6 @@ object Canonicalize {
     mentionRows.unionByName(persoonRows)
   }
 
-  /** The dimension-sized slice of the canonical map: `persoon:* → canon`.
-    * Bounded by the dictionary (≈10^4 rows at production scale) — broadcast
-    * material, unlike the corpus-sized mention→canon projection.
-    */
-  def persoonCanonMap(linkedPersons: DataFrame): DataFrame =
-    persoonCanonWithFlag(linkedPersons)._1
-
   /** `(persoon canon rows, hasMerges)` with the whole dimension-bounded CC +
     * canonical-rule fold done on the DRIVER when the surface edge set is
     * small (it is, by construction — alias space, not corpus): one collect
@@ -123,8 +116,10 @@ object Canonicalize {
     }
   }
 
-  /** Canonical triple set WITHOUT materializing the corpus-sized
-    * mention→canon map — the scale path `Pipeline.build` uses.
+  /** String-space form of `rewriteCompact` over `Triples.allNonMention`
+    * rows — kept as the reference the specs and the benchmark compare the
+    * compact path against; production code derives canonical triples as
+    * `Triples.decode(rewriteCompact(…))`.
     *
     * Key fact (provable from the linker's construction): every
     * MATCHES_PERSOON triple collapses to a self-loop under rewrite. A
@@ -133,20 +128,11 @@ object Canonicalize {
     * because this linker row exists), so subj-canon == obj-canon, and
     * `rewrite` drops the row. The canonical set is therefore exactly the
     * NON-mention triples with `persoon:` endpoints rewritten through the
-    * tiny `persoonCanonMap` — two broadcast joins instead of two
-    * corpus-sized sort-merge joins, and when CC produced no cross-entity
-    * merges (the map is the identity — checked on the driver over the
-    * dimension-sized map, ~10^4 rows) the rewrite and the re-dedup are
-    * skipped entirely: the branches of `Triples.all` are each internally
-    * distinct and their predicates are pairwise disjoint, so their union is
-    * already a set.
-    */
-  def canonicalTriples(nonMentionTriples: DataFrame, persoonCanon: DataFrame): DataFrame =
-    canonicalTriples(nonMentionTriples, persoonCanon,
-      !persoonCanon.where(col("node") =!= col("canon")).isEmpty)
-
-  /** As above with the has-merges flag precomputed (Pipeline gets it for
-    * free from the driver-side CC — no probe job).
+    * dimension-sized persoon canon map (`persoonCanonWithFlag`) — two
+    * broadcast joins instead of two corpus-sized sort-merge joins, and when
+    * CC produced no cross-entity merges (`hasMerges` false: the map is the
+    * identity) the rewrite and the re-dedup are skipped entirely, because
+    * `allNonMention` is already a set.
     */
   def canonicalTriples(nonMentionTriples: DataFrame, persoonCanon: DataFrame,
       hasMerges: Boolean): DataFrame = {
@@ -174,7 +160,8 @@ object Canonicalize {
     * BEFORE the write-aligned exchange, so dedup downstream runs once over
     * post-rewrite rows (merge-collapsed duplicates included) and the bucket
     * hash is computed on the canonical key. `hasMerges=false` (the
-    * identity map) skips everything, like `canonicalTriples`.
+    * identity map) skips everything. `Pipeline.build` feeds the result to
+    * both `Triples.decode` (the string view) and `Materialize.writeGraphFused`.
     */
   def rewriteCompact(compact: DataFrame, persoonCanon: DataFrame,
       hasMerges: Boolean): DataFrame = {
@@ -202,7 +189,8 @@ object Canonicalize {
   /** Rewrite triple endpoints through the canonical map (two left joins;
     * un-mapped nodes stay themselves), then re-dedup. Identity edges created
     * by the rewrite (mention → its own canon via MATCHES_PERSOON) collapse to
-    * self-loops and are dropped.
+    * self-loops and are dropped. The generic reference the scale path
+    * (`persoonCanonWithFlag` + `rewriteCompact`) is checked against.
     */
   def rewrite(triples: DataFrame, canonMap: DataFrame): DataFrame = {
     val subjMap = canonMap.select(col("node").as("subj"), col("canon").as("subj_canon"))

@@ -84,9 +84,9 @@ object Materialize {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** True when the warehouse already holds a node table — the
-    * initial-vs-incremental decision `writeGraph` makes, exposed so callers
-    * can route the initial load through `writeGraphFused`.
+  /** True when the warehouse already holds a node table — callers route
+    * the initial load through `writeGraphFused` and later loads through
+    * `writeGraph`.
     */
   def graphExists(spark: SparkSession, warehouse: String): Boolean =
     exists(spark, s"$warehouse/nodes")
@@ -245,79 +245,6 @@ object Materialize {
     spark.read.parquet(path)
       .where(col("bucket").isin(buckets.map(b => b: Any): _*))
 
-  /** INITIAL full-derivation write, shaped for the first (cluster-sized)
-    * load — the path the bench measures:
-    *
-    *  - The triple plan is executed exactly ONCE, straight into the edge
-    *    table. No intermediate checkpoint of the triple set (at 10^12 rows
-    *    those blocks are pure extra memory/IO traffic) and, when the caller
-    *    guarantees `triplesDistinct` (Canonicalize.canonicalTriples emits a
-    *    set by construction), no dedup exchange over the widest data either.
-    *  - The node table is derived from the WRITTEN edge files — a columnar
-    *    re-read of the two key columns, far cheaper than re-deriving from
-    *    the triple plan. Endpoint integrity is a no-op by construction on a
-    *    full derivation (the node set IS the endpoint set).
-    *  - Returns the edge count from parquet metadata — no extra data pass
-    *    (replaces a count action over the triple set).
-    *
-    * Overwrite semantics make a retried initial load idempotent after a
-    * partial failure.
-    */
-  def writeGraphInitial(spark: SparkSession, warehouse: String,
-      triples: DataFrame, triplesDistinct: Boolean = true,
-      nBuckets: Int = NBuckets, filesPerBucket: Int = 1): Long = {
-    val edgePath = s"$warehouse/edges"
-    val e = edges(triples)
-      .withColumn("bucket", pmod(xxhash64(col("src_key")), lit(nBuckets)).cast("int"))
-    val eUnique =
-      if (triplesDistinct) e
-      else e.dropDuplicates(Seq("src_key", "rel_type", "dst_key"))
-    val subKey = xxhash64(col("src_key"), col("rel_type"), col("dst_key"))
-    alignedForWrite(eUnique, subKey, nBuckets, filesPerBucket)
-      .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(edgePath)
-    writeBucketMeta(spark, edgePath, nBuckets)
-    val written = spark.read.parquet(edgePath)
-    val keys = written.select(col("src_key").as("key"))
-      .unionByName(written.select(col("dst_key").as("key")))
-    upsert(spark, s"$warehouse/nodes",
-      keys.select(substring_index(col("key"), ":", 1).as("label"), col("key")),
-      Seq("key"), "key", nBuckets, filesPerBucket)
-    written.count()
-  }
-
-  /** FUSED initial graph write over the compact triple derivation
-    * (`Triples.allNonMentionCompact` rows, persoon endpoints already
-    * rewritten via `Canonicalize.rewriteCompact`) — the ONE-EXCHANGE form
-    * of `writeGraphInitial`, producing a byte-equivalent warehouse:
-    *
-    *  - The dedup rides the write-aligned exchange. Every copy of a
-    *    (pred, a, b) triple hashes to the same (bucket, sub-split)
-    *    partition — bucket is a function of (subj_pre, a) and the
-    *    sub-split of the triple — so a partition-local sort + lag-window
-    *    drops duplicates exactly like the separate `.distinct()` exchange
-    *    of the string path, without a second corpus-sized shuffle. The
-    *    sort is per-partition CPU (scales with cores); the removed
-    *    exchange was memory-bus bytes (does not).
-    *  - Key STRINGS are built after the dedup, inside the write stage —
-    *    they are never shuffled at all (the exchange carries compact ids).
-    *  - The deduped compact rows are lazily `localCheckpoint`ed, so the
-    *    node derivation re-reads ~id-sized blocks instead of re-decoding
-    *    the written string parquet (the string path's node pass was the
-    *    single most expensive write job). Node keys partial-aggregate in
-    *    the blocks scan; only distinct keys reach the node exchange.
-    *
-    * Overwrite semantics for both tables: a retried initial load is
-    * idempotent after any partial failure.
-    */
-  /** The fused write's dedup-in-the-aligned-exchange plan, exposed for plan
-    * assertions: repartition on (bucket, sub-split) — both functions of the
-    * dedup key — then `distinct()`, which is EXCHANGE-FREE here: the hash
-    * aggregate's ClusteredDistribution(all columns) is satisfied by the
-    * existing HashPartitioning(bucket, _sub) — a subset of the grouping —
-    * and every copy of a (pred, a, b) triple shares (bucket, _sub), so the
-    * partition-local codegen'd hash agg IS a complete dedup (no sort, no
-    * window buffering, no second corpus shuffle).
-    */
   /** Exchange payload compression: the (pred, subj_pre, obj_pre) string
     * triple of a compact row is drawn from the CLOSED 12-entry vocabulary
     * (`Triples.compactVocab` — the prefixes are functions of the
@@ -341,11 +268,20 @@ object Materialize {
       case ((v, i), acc) => when(col("_pc") === i, lit(field(v))).otherwise(acc)
     }.as(out)
 
-  /** Coded form of the aligned dedup — (_pc, a, b, bucket), still hash-
-    * partitioned on (bucket, _sub). Kept coded so `writeGraphFused` can
-    * checkpoint the SMALL representation (the decode is a few codegen'd
-    * comparisons per row, re-running it per consumer is free; re-reading
-    * string blocks is memory traffic).
+  /** The fused write's dedup-in-the-aligned-exchange plan, exposed for plan
+    * assertions: repartition on (bucket, sub-split) — both functions of the
+    * dedup key — then `distinct()`, which is EXCHANGE-FREE here: the hash
+    * aggregate's ClusteredDistribution(all columns) is satisfied by the
+    * existing HashPartitioning(bucket, _sub) — a subset of the grouping —
+    * and every copy of a (pred, a, b) triple shares (bucket, _sub), so the
+    * partition-local codegen'd hash agg IS a complete dedup (no sort, no
+    * window buffering, no second corpus shuffle).
+    *
+    * Returns the CODED rows (_pc, a, b, bucket), still hash-partitioned on
+    * (bucket, _sub), so `writeGraphFused` can checkpoint the SMALL
+    * representation (the decode is a few codegen'd comparisons per row,
+    * re-running it per consumer is free; re-reading string blocks is memory
+    * traffic).
     */
   private[graft] def alignedDedupCoded(compact: DataFrame, nBuckets: Int,
       filesPerBucket: Int): DataFrame = {
@@ -362,10 +298,6 @@ object Materialize {
       .distinct()
       .select("_pc", "a", "b", "bucket")
   }
-
-  private def decoded(coded: DataFrame): DataFrame =
-    coded.select(decodeCode(_._1, "pred"), col("a"), col("b"),
-      decodeCode(_._2, "subj_pre"), decodeCode(_._3, "obj_pre"), col("bucket"))
 
   /** Prefix codes grouped by their DISTINCT prefix value (largest group
     * last so it becomes the `otherwise` branch): the 12-entry vocabulary
@@ -406,10 +338,28 @@ object Materialize {
     byPre(field)(p =>
       if (p.isEmpty) substring_index(id, ":", 1) else lit(p.stripSuffix(":")))
 
-  private[graft] def alignedDedup(compact: DataFrame, nBuckets: Int,
-      filesPerBucket: Int): DataFrame =
-    decoded(alignedDedupCoded(compact, nBuckets, filesPerBucket))
-
+  /** FUSED initial graph write over the compact triple derivation
+    * (`Pipeline.Stages.canonicalCompact`: `Triples.allNonMentionCompact`
+    * rows, persoon endpoints already rewritten) — the ONE-EXCHANGE initial
+    * load, producing the same warehouse as `writeGraph` of the decoded set
+    * into an empty warehouse (asserted in FusedWriteSpec):
+    *
+    *  - The dedup rides the write-aligned exchange (`alignedDedupCoded`):
+    *    every copy of a (pred, a, b) triple hashes to the same
+    *    (bucket, sub-split) partition — bucket is a function of
+    *    (subj_pre, a) and the sub-split of the triple — so no second
+    *    corpus-sized shuffle is needed.
+    *  - Key STRINGS are built after the dedup, inside the write stage —
+    *    they are never shuffled at all (the exchange carries compact ids).
+    *  - The deduped coded rows are lazily `localCheckpoint`ed, so the node
+    *    derivation re-reads ~id-sized blocks instead of re-decoding the
+    *    written string parquet. Node keys partial-aggregate in the blocks
+    *    scan; only distinct keys reach the node exchange.
+    *  - Returns the edge count, observed on the edge write itself.
+    *
+    * Overwrite semantics for both tables: a retried initial load is
+    * idempotent after any partial failure.
+    */
   def writeGraphFused(spark: SparkSession, warehouse: String, compact: DataFrame,
       nBuckets: Int = NBuckets, filesPerBucket: Int = 1): Long = {
     val edgePath = s"$warehouse/edges"
@@ -425,9 +375,9 @@ object Materialize {
       labelFromCode(_._3, col("b")).as("dst_label"),
       keyFromCode(_._3, col("b")).as("dst_key"),
       col("bucket"))
-    // the edge count rides the write itself as an observed metric — the
-    // string path's final `read.parquet(edges).count()` job re-parsed every
-    // file footer (~60 ms each) for a number the write plan already knows
+    // the edge count rides the write itself as an observed metric — a
+    // final `read.parquet(edges).count()` job would re-parse every file
+    // footer (~60 ms each) for a number the write plan already knows
     val obs = org.apache.spark.sql.Observation()
     // the checkpointed RDD preserves the aligned physical partitioning
     // (CollectMetrics passes partitioning through), so this dynamic-
@@ -467,23 +417,20 @@ object Materialize {
   }
 
   /** Materialize a triple set into `warehouse/{nodes,edges}` with endpoint
-    * integrity enforced against the post-upsert node set. Set
-    * `triplesDistinct` when the input is already a set (the canonical
-    * pipeline output is) to skip the initial-path dedup exchange.
+    * integrity enforced against the post-upsert node set: two keyed upserts,
+    * which on an empty warehouse write the bucket markers and the aligned
+    * layout (`upsert`'s empty-table branch). Both upserts dedup on their
+    * keys, so `triplesDistinct` has NO effect; it stays in the signature for
+    * source compatibility with existing callers. The cluster-sized initial
+    * load is `writeGraphFused`.
     */
   def writeGraph(spark: SparkSession, warehouse: String, triples: DataFrame,
       triplesDistinct: Boolean = false, nBuckets: Int = NBuckets): Unit = {
-    val initial = !exists(spark, s"$warehouse/nodes")
-    if (initial) {
-      writeGraphInitial(spark, warehouse, triples, triplesDistinct, nBuckets)
-      ()
-    } else {
-      upsert(spark, s"$warehouse/nodes", nodesRaw(triples), Seq("key"), "key", nBuckets)
-      val e = withEndpointIntegrity(edges(triples),
-        spark.read.parquet(s"$warehouse/nodes"))
-      upsert(spark, s"$warehouse/edges", e,
-        Seq("src_key", "rel_type", "dst_key"), "src_key", nBuckets)
-    }
+    upsert(spark, s"$warehouse/nodes", nodesRaw(triples), Seq("key"), "key", nBuckets)
+    val e = withEndpointIntegrity(edges(triples),
+      spark.read.parquet(s"$warehouse/nodes"))
+    upsert(spark, s"$warehouse/edges", e,
+      Seq("src_key", "rel_type", "dst_key"), "src_key", nBuckets)
   }
 
   def readNodes(spark: SparkSession, warehouse: String): DataFrame =

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.canonicalize.Canonicalize
 import graft.extract.Extract
 import graft.link.Link
@@ -13,21 +12,20 @@ import graft.triples.Triples
   * (src/loaders/loader_manager.py:118-225): dimensions first (broadcast
   * dims feed the link stage), then the analysis pipeline.
   *
-  * `linkedPersons` feeds three consumers (triples, interruptions via
-  * Triples.all, CC edges) — it is persisted once per run so the
-  * extract+link work is not recomputed per branch.
+  * `linkedPersons` feeds three consumers (triples, interruptions, CC
+  * edges) — it is persisted once per run so the extract+link work is not
+  * recomputed per branch.
   */
 object Pipeline {
 
-  /** `canonicalCompact`: the same canonical triple set as `canonical`, in
-    * the pre-dedup compact form (`Triples.allNonMentionCompact` with
-    * persoon endpoints rewritten) — feed it to
-    * `Materialize.writeGraphFused`, whose write-aligned exchange performs
-    * the dedup. `canonical` remains the deduped string form for every
-    * other consumer.
+  /** The canonical triple set has ONE derivation: `canonicalCompact`, the
+    * pre-dedup compact rows (`Triples.allNonMentionCompact` with persoon
+    * endpoints rewritten). Feed it to `Materialize.writeGraphFused`, whose
+    * write-aligned exchange performs the dedup. `canonical` is its deduped
+    * string view (`Triples.decode`) for every other consumer. `triples` is
+    * the full pre-canonicalization set, mention provenance included.
     */
   final case class Stages(
-      turns: DataFrame,
       linkedPersons: DataFrame,
       linkedZaken: DataFrame,
       votes: DataFrame,
@@ -104,15 +102,11 @@ object Pipeline {
     // asserted in ConnectedComponentsSpec. This removes every corpus-sized
     // shuffle from the canonicalize stage.
     val (persoonCanon, hasMerges) = Canonicalize.persoonCanonWithFlag(linkedPersons)
-    val canonical = Canonicalize.canonicalTriples(
-      Triples.allNonMention(linkedPersons, linkedZaken, votes,
-        Dict.personsDf(spark), Dict.fractiesDf(spark)),
-      persoonCanon, hasMerges)
     val canonicalCompact = Canonicalize.rewriteCompact(
       Triples.allNonMentionCompact(linkedPersons, linkedZaken, votes,
         Dict.personsDf(spark), Dict.fractiesDf(spark)),
       persoonCanon, hasMerges)
-    Stages(turns, linkedPersons, linkedZaken, votes, triples, canonical,
-      canonicalCompact)
+    Stages(linkedPersons, linkedZaken, votes, triples,
+      Triples.decode(canonicalCompact), canonicalCompact)
   }
 }

@@ -4,11 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.canonicalize.Canonicalize
 import graft.extract.Extract
-import graft.link.Link
-import graft.synth.Dict
-import graft.triples.Triples
+import graft.materialize.Materialize
+import graft.pipeline.Pipeline
 
 /** Incremental ingestion — the Spark Structured Streaming re-expression of
   * the reference's incremental traits (SURVEY.md §2.10): date-watermark
@@ -35,19 +33,8 @@ object StreamingPipeline {
 
   /** One micro-batch: extract → link → triples → canonicalize → upsert. */
   private[streaming] def processBatch(spark: SparkSession, batch: DataFrame,
-      warehouse: String): Unit = {
-    val linked = Link.linkPersons(
-      Extract.speakerMentions(batch), Dict.personsDf(spark)).cache()
-    val linkedZaken = Link.linkZaken(Extract.caseMentions(batch),
-      Dict.zakenDf(spark), Dict.dossiersDf(spark), Dict.documentsDf(spark))
-    val votes = Extract.voteMentions(batch)
-    val triples = Triples.all(linked, linkedZaken, votes,
-      Dict.personsDf(spark), Dict.fractiesDf(spark))
-    val canonical = Canonicalize.rewrite(triples,
-      Canonicalize.canonicalMapScalable(linked))
-    graft.materialize.Materialize.writeGraph(spark, warehouse, canonical)
-    linked.unpersist()
-  }
+      warehouse: String): Unit =
+    Materialize.writeGraph(spark, warehouse, Pipeline.build(spark, batch).canonical)
 
   /** Drain all currently-available input files into the warehouse, then stop
     * (Trigger.AvailableNow). Re-running with the same `checkpointDir` resumes

@@ -1,6 +1,6 @@
 package graft.triples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analysis.Interruptions
 import graft.functions.TextFunctions
@@ -30,13 +30,8 @@ object Triples {
   private val C = "conv:"
   private val F = "fractie:"
 
-  private def zaakKey = concat(lit("zaak:"), col("entity_id"))
   private def persoonKey = concat(lit(P), col("persoon_id"))
   private def convKey = concat(lit(C), col("conv_id"))
-
-  private def tri(subj: org.apache.spark.sql.Column, pred: String,
-      obj: org.apache.spark.sql.Column)(df: DataFrame): DataFrame =
-    df.select(subj.as("subj"), lit(pred).as("pred"), obj.as("obj")).distinct()
 
   /** Projection without dedup — for branches whose input is already unique
     * per output key (one linker row per mention / one dict row per entity):
@@ -58,52 +53,6 @@ object Triples {
         col("conv_id"), col("turn_idx"), col("v_first"), col("v_last"))),
       Pred.MatchesPersoon, persoonKey)(linkedPersons)
 
-  /** (persoon, SPOKE_IN, conv) — reference loader :258-318. */
-  def spokeIn(linkedPersons: DataFrame): DataFrame =
-    tri(persoonKey, Pred.SpokeIn, convKey)(linkedPersons)
-
-  /** Same-turn speaker × case co-occurrence → DISCUSSES_ZAAK (tier-1 zaak
-    * match) or DISCUSSES_DOSSIER (dossier/document fallback tiers) —
-    * reference connection semantics vlos_pipeline.py:324-353 with tier split
-    * per :280-308. Equi-join on (conv_id, turn_idx): both sides derive from
-    * the same scan, so at scale this is a co-partitioned join.
-    */
-  def discusses(linkedPersons: DataFrame, linkedZaken: DataFrame): DataFrame = {
-    val z = linkedZaken.where(col("entity_id").isNotNull)
-      .select("conv_id", "turn_idx", "entity_id", "match_type")
-    val joined = linkedPersons.select("conv_id", "turn_idx", "persoon_id")
-      .join(z, Seq("conv_id", "turn_idx"))
-    joined.select(
-      persoonKey.as("subj"),
-      when(col("match_type") === graft.model.MatchType.Exact, Pred.DiscussesZaak)
-        .otherwise(Pred.DiscussesDossier).as("pred"),
-      zaakKey.as("obj")).distinct()
-  }
-
-  /** Conversation provenance edges (reference CONTAINS_* edges, loader :420-470). */
-  def containment(linkedPersons: DataFrame, linkedZaken: DataFrame): DataFrame =
-    tri(convKey, Pred.ContainsSpeaker, persoonKey)(linkedPersons)
-      .unionByName(tri(convKey, Pred.ContainsZaak, zaakKey)(
-        linkedZaken.where(col("entity_id").isNotNull)))
-
-  /** Dictionary membership edges (reference Persoon→Fractie via
-    * FractieZetelPersoon; dims are part of the graph, seed_enums parity).
-    */
-  def memberOf(persons: DataFrame): DataFrame =
-    triRaw(persoonKey, Pred.MemberOf, concat(lit(F), col("fractie_id")))(persons)
-
-  /** Interruption triples from the W1 sequence analysis —
-    * reference loader :471-520.
-    */
-  def interruptions(linkedSpeakers: DataFrame): DataFrame = {
-    val events = Interruptions.detect(linkedSpeakers)
-    val interrupter = tri(concat(lit(P), col("interrupter")), Pred.InterruptedIn, convKey)(events)
-    val interrupted = tri(concat(lit(P), col("interrupted")), Pred.WasInterruptedIn, convKey)(events)
-    val responded = tri(concat(lit(P), col("interrupted")), Pred.RespondedIn, convKey)(
-      events.where(col("itype") === InterruptionType.WithResponse))
-    interrupter.unionByName(interrupted).unionByName(responded)
-  }
-
   /** Vote triples: synthetic vote node per utterance, fractie resolved by
     * name (J12 — reference vlos_neo4j_loader.py:536-540). `fracties` is a
     * broadcast dim.
@@ -121,25 +70,9 @@ object Triples {
         triRaw(col("vote_key"), Pred.CastByFractie, concat(lit(F), col("fractie_id")))(withId))
   }
 
-  /** Every branch except mention provenance — the input to the scale-path
-    * canonicalization (`Canonicalize.canonicalTriples`), which proves the
-    * mention branch always self-loops away. Raw branches fused under ONE
-    * distinct (see the raw-branch Scaladoc), so the result is a set.
-    *
-    * The fused distinct runs in COMPACT ID SPACE: branches that need dedup
-    * emit `(pred, a, b)` with the raw entity ids, and the namespaced key
-    * strings are built AFTER the dedup from a pred→prefix mapping (the
-    * prefix pair is a function of the predicate, so id-space dedup ≡
-    * string-space dedup). The one corpus-sized exchange of the derivation
-    * therefore carries ~1/3 the bytes of pre-built key strings, and the
-    * concats run on the deduped (×5-10 smaller) row set. The vote branches
-    * are unique by construction (the vote key embeds its whole row) and
-    * predicate-disjoint from the rest, so they bypass the exchange
-    * entirely.
-    */
   /** The raw (pred, a, b) branch union in COMPACT ID SPACE, pre-dedup —
-    * the single source of the branch list, shared by `allNonMention`
-    * (string path) and `allNonMentionCompact` (fused write path).
+    * the single source of the branch list (`allNonMentionCompact` adds the
+    * prefix columns and the vote branches).
     */
   private def compactUnion(linkedPersons: DataFrame, linkedZaken: DataFrame,
       persons: DataFrame): DataFrame = {
@@ -223,10 +156,10 @@ object Triples {
   /** The closed (pred, subj_pre, obj_pre) vocabulary of compact triple rows
     * — the prefix pair is a FUNCTION of the predicate (mention/vote rows
     * carry full keys with empty prefixes), which is what lets
-    * `Materialize.alignedDedup` dictionary-encode the whole string triple
-    * to one small int for the write-aligned exchange and decode it back
-    * after the dedup. Mirrors `subjPrefixCol`/`objPrefixCol` below; the
-    * agreement is pinned by FusedWriteSpec's warehouse-equality assertions.
+    * `Materialize.alignedDedupCoded` dictionary-encode the whole string
+    * triple to one small int for the write-aligned exchange, and what makes
+    * `decode`'s id-space distinct exact. Mirrors `subjPrefixCol`/`objPrefixCol`
+    * below; the agreement is pinned by TriplesSpec.
     */
   val compactVocab: Seq[(String, String, String)] = Seq(
     (Pred.SpokeIn, P, C),
@@ -243,8 +176,7 @@ object Triples {
     (Pred.MatchesPersoon, "", ""))
 
   /** Key-namespace prefix of the subject / object as a function of the
-    * predicate (the prefix pair is determined by the predicate, so id-space
-    * dedup ≡ string-space dedup).
+    * predicate.
     */
   private def subjPrefixCol: org.apache.spark.sql.Column =
     when(col("pred").isin(Pred.ContainsSpeaker, Pred.ContainsZaak), C).otherwise(P)
@@ -257,23 +189,15 @@ object Triples {
       .when(col("pred") === Pred.ContainsZaak, "zaak:")
       .otherwise(F) // MEMBER_OF
 
-  def allNonMention(linkedPersons: DataFrame, linkedZaken: DataFrame,
-      voteMentions: DataFrame, persons: DataFrame, fracties: DataFrame): DataFrame =
-    compactUnion(linkedPersons, linkedZaken, persons)
-      .distinct()
-      .select(
-        concat(subjPrefixCol, col("a")).as("subj"), col("pred"),
-        concat(objPrefixCol, col("b")).as("obj"))
-      .unionByName(votes(voteMentions, fracties))
-
-  /** The full triple derivation in the FUSED-WRITE form: one row per raw
-    * (pred, a, b) occurrence (NO dedup exchange here) plus the namespace
-    * prefixes as data columns. Vote triples (unique by construction,
-    * predicate-disjoint) carry their full key strings with empty prefixes,
-    * so `concat(pre, id)` is the final key for every row. The consumer
-    * (`Materialize.writeGraphFused`) dedups this inside the write-aligned
-    * exchange — (pred, a, b) determines the prefixes, so a (pred, a, b)
-    * dedup is exactly `allNonMention`'s string-space distinct.
+  /** Every branch except mention provenance in COMPACT form — THE triple
+    * derivation: one row per raw (pred, a, b) occurrence (no dedup here)
+    * plus the namespace prefixes as data columns. Vote triples (unique by
+    * construction, predicate-disjoint) carry their full key strings with
+    * empty prefixes, so `concat(pre, id)` is the final key for every row.
+    * Its consumers dedup it where it is cheapest: `decode` before building
+    * key strings, `Materialize.writeGraphFused` inside its write-aligned
+    * exchange. Mention provenance is left out because canonicalization
+    * provably self-loops it away (`Canonicalize.rewriteCompact`).
     */
   def allNonMentionCompact(linkedPersons: DataFrame, linkedZaken: DataFrame,
       voteMentions: DataFrame, persons: DataFrame, fracties: DataFrame): DataFrame =
@@ -283,6 +207,25 @@ object Triples {
       .unionByName(votes(voteMentions, fracties)
         .select(col("pred"), col("subj").as("a"), col("obj").as("b"),
           lit("").as("subj_pre"), lit("").as("obj_pre")))
+
+  /** The string `(subj, pred, obj)` view of compact rows, as a set: the
+    * distinct runs in COMPACT ID SPACE and the namespaced key strings are
+    * built after it. Exact, because the prefix pair is a function of the
+    * predicate (`compactVocab`), so id-space dedup ≡ string-space dedup. The
+    * one corpus-sized exchange therefore carries ~1/3 the bytes of pre-built
+    * key strings, and the concats run on the deduped (×5-10 smaller) rows.
+    */
+  def decode(compact: DataFrame): DataFrame =
+    compact.select("pred", "a", "b", "subj_pre", "obj_pre").distinct()
+      .select(concat(col("subj_pre"), col("a")).as("subj"), col("pred"),
+        concat(col("obj_pre"), col("b")).as("obj"))
+
+  /** Every branch except mention provenance, as a set of string triples:
+    * `decode` of `allNonMentionCompact`.
+    */
+  def allNonMention(linkedPersons: DataFrame, linkedZaken: DataFrame,
+      voteMentions: DataFrame, persons: DataFrame, fracties: DataFrame): DataFrame =
+    decode(allNonMentionCompact(linkedPersons, linkedZaken, voteMentions, persons, fracties))
 
   /** The full triple set. Inputs are the upstream stage outputs; dims are the
     * dictionary DataFrames. (The mention branch is unique by construction,

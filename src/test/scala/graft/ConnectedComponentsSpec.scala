@@ -92,6 +92,20 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(scalable == occurrence)
   }
 
+  // identity case: argmax-shaped linker output (one persoon per surface)
+  private lazy val cleanLinked = Seq(
+    ("c1", 0, "Anna", "Jansen", "P1"),
+    ("c1", 2, "", "Berg", "P2"),
+    ("c1", 5, "", "Jansen", "P1")
+  ).toDF("conv_id", "turn_idx", "v_first", "v_last", "persoon_id")
+
+  // merge case: one surface linking two entities collapses P3 into P2
+  private lazy val mergedLinked = Seq(
+    ("c1", 0, "Anna", "Jansen", "P1"),
+    ("c2", 1, "", "Smit", "P2"),
+    ("c2", 4, "", "Smit", "P3")
+  ).toDF("conv_id", "turn_idx", "v_first", "v_last", "persoon_id")
+
   test("scale-path canonicalTriples equals generic rewrite (identity and merge cases)") {
     import org.apache.spark.sql.functions.col
     val personsDim = Seq(("P1", "F1"), ("P2", "F1"), ("P3", "F2"))
@@ -103,32 +117,39 @@ class ConnectedComponentsSpec extends SparkSpec {
       val full = graft.canonicalize.Canonicalize.rewrite(
         graft.triples.Triples.all(linked, zaken, votes, personsDim, fractiesDim),
         Canonicalize.canonicalMapScalable(linked))
+      val (canon, hasMerges) = Canonicalize.persoonCanonWithFlag(linked)
       val fast = Canonicalize.canonicalTriples(
         graft.triples.Triples.allNonMention(linked, zaken, votes, personsDim, fractiesDim),
-        Canonicalize.persoonCanonMap(linked))
+        canon, hasMerges)
+      // the production derivation: compact rewrite, then the string view
+      val production = graft.triples.Triples.decode(Canonicalize.rewriteCompact(
+        graft.triples.Triples.allNonMentionCompact(linked, zaken, votes, personsDim,
+          fractiesDim), canon, hasMerges))
       def s(df: org.apache.spark.sql.DataFrame) =
         df.select(col("subj"), col("pred"), col("obj"))
           .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      assert(s(production) == s(fast))
       (s(full), s(fast))
     }
-    // identity case: argmax-shaped linker output (one persoon per surface)
-    val clean = Seq(
-      ("c1", 0, "Anna", "Jansen", "P1"),
-      ("c1", 2, "", "Berg", "P2"),
-      ("c1", 5, "", "Jansen", "P1")
-    ).toDF("conv_id", "turn_idx", "v_first", "v_last", "persoon_id")
-    val (fullClean, fastClean) = canonSets(clean)
+    val (fullClean, fastClean) = canonSets(cleanLinked)
     assert(fastClean == fullClean)
-    // merge case: one surface linking two entities collapses P3 into P2
-    val merged = Seq(
-      ("c1", 0, "Anna", "Jansen", "P1"),
-      ("c2", 1, "", "Smit", "P2"),
-      ("c2", 4, "", "Smit", "P3")
-    ).toDF("conv_id", "turn_idx", "v_first", "v_last", "persoon_id")
-    val (fullMerged, fastMerged) = canonSets(merged)
+    val (fullMerged, fastMerged) = canonSets(mergedLinked)
     assert(fastMerged == fullMerged)
     assert(fastMerged.exists(_._1 == "persoon:P2") &&
       !fastMerged.exists(t => t._1 == "persoon:P3" && t._2 == "SPOKE_IN"))
+  }
+
+  test("persoon canon map: distributed CC fallback equals the driver-side path") {
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    for ((linked, expectMerges) <- Seq((cleanLinked, false), (mergedLinked, true))) {
+      val (local, localMerges) = Canonicalize.persoonCanonWithFlag(linked)
+      // localMaxEdges = 1: every input here has more surface edges, so CC
+      // runs distributed
+      val (dist, distMerges) = Canonicalize.persoonCanonWithFlag(linked, localMaxEdges = 1)
+      assert(asMap(dist) == asMap(local))
+      assert(distMerges == localMerges && localMerges == expectMerges)
+    }
   }
 
   test("canonicalMap prefers entity-namespaced representative") {

@@ -7,12 +7,13 @@ import graft.pipeline.Pipeline
 import graft.synth.{Dict, TranscriptGen}
 import graft.triples.Triples
 
-/** `Materialize.writeGraphFused` (one-exchange compact write) must produce
-  * EXACTLY the warehouse `writeGraphInitial` produces from the string
-  * canonical set — same edge rows, same node rows, same bucket values,
-  * same count — on the real generator corpus (speakers, cases, votes,
-  * interruptions all present), in both the no-merge fast path and the
-  * persoon-merge rewrite path.
+/** The two graph writers agree: `Materialize.writeGraphFused` (one-exchange
+  * compact write, the initial load) must produce EXACTLY the warehouse
+  * `Materialize.writeGraph` (keyed upserts of the decoded string set)
+  * produces in an empty warehouse — same edge rows, same node rows, same
+  * bucket values, same count — on the real generator corpus (speakers,
+  * cases, votes, interruptions all present), in both the no-merge fast path
+  * and the persoon-merge rewrite path.
   */
 class FusedWriteSpec extends SparkSpec {
 
@@ -24,7 +25,12 @@ class FusedWriteSpec extends SparkSpec {
     val l = a.select(cols: _*)
     val r = b.select(cols: _*)
     assert(l.exceptAll(r).isEmpty && r.exceptAll(l).isEmpty,
-      s"$what differs between initial and fused writes")
+      s"$what differs between the two warehouses")
+  }
+
+  private def assertSameWarehouse(a: String, b: String): Unit = {
+    assertSameRows(readBack(s"$a/edges"), readBack(s"$b/edges"), "edges")
+    assertSameRows(readBack(s"$a/nodes"), readBack(s"$b/nodes"), "nodes")
   }
 
   private lazy val stages: Pipeline.Stages = {
@@ -34,14 +40,13 @@ class FusedWriteSpec extends SparkSpec {
 
   test("fused write == string write (pipeline corpus, no-merge path)") {
     val base = java.nio.file.Files.createTempDirectory("fused-eq").toString
-    val nInitial = Materialize.writeGraphInitial(spark, s"$base/a",
-      stages.canonical, triplesDistinct = true, nBuckets = 8, filesPerBucket = 2)
+    Materialize.writeGraph(spark, s"$base/a", stages.canonical, nBuckets = 8)
     val nFused = Materialize.writeGraphFused(spark, s"$base/b",
       stages.canonicalCompact, nBuckets = 8, filesPerBucket = 2)
-    assert(nInitial == nFused, s"edge counts differ: $nInitial vs $nFused")
+    val nString = readBack(s"$base/a/edges").count()
+    assert(nString == nFused, s"edge counts differ: $nString vs $nFused")
     assert(nFused > 0)
-    assertSameRows(readBack(s"$base/a/edges"), readBack(s"$base/b/edges"), "edges")
-    assertSameRows(readBack(s"$base/a/nodes"), readBack(s"$base/b/nodes"), "nodes")
+    assertSameWarehouse(s"$base/a", s"$base/b")
   }
 
   test("fused write == string write under a persoon merge (rewrite path)") {
@@ -51,6 +56,8 @@ class FusedWriteSpec extends SparkSpec {
     val canonMap = Seq(
       ("persoon:P00", "persoon:P00"),
       ("persoon:P01", "persoon:P00")).toDF("node", "canon")
+    // the string side rewrites in string space (the reference
+    // `canonicalTriples`), independently of the compact rewrite
     val strings = Canonicalize.canonicalTriples(
       Triples.allNonMention(stages.linkedPersons, stages.linkedZaken,
         stages.votes, Dict.personsDf(spark), Dict.fractiesDf(spark)),
@@ -60,20 +67,33 @@ class FusedWriteSpec extends SparkSpec {
         stages.votes, Dict.personsDf(spark), Dict.fractiesDf(spark)),
       canonMap, hasMerges = true)
     val base = java.nio.file.Files.createTempDirectory("fused-merge").toString
-    val nInitial = Materialize.writeGraphInitial(spark, s"$base/a",
-      strings, triplesDistinct = true, nBuckets = 4)
+    Materialize.writeGraph(spark, s"$base/a", strings, nBuckets = 4)
     val nFused = Materialize.writeGraphFused(spark, s"$base/b", compact, nBuckets = 4)
-    assert(nInitial == nFused, s"edge counts differ: $nInitial vs $nFused")
+    val nString = readBack(s"$base/a/edges").count()
+    assert(nString == nFused, s"edge counts differ: $nString vs $nFused")
     // the merge must actually have collapsed something: P01 gone, P00 present
     val srcs = readBack(s"$base/b/edges").select("src_key").distinct()
       .collect().map(_.getString(0)).toSet
     assert(!srcs.contains("persoon:P01") && srcs.contains("persoon:P00"))
-    assertSameRows(readBack(s"$base/a/edges"), readBack(s"$base/b/edges"), "edges")
-    assertSameRows(readBack(s"$base/a/nodes"), readBack(s"$base/b/nodes"), "nodes")
+    assertSameWarehouse(s"$base/a", s"$base/b")
+  }
+
+  test("writeGraph ignores triplesDistinct: duplicated input, identical marked warehouses") {
+    val dup = stages.canonical.unionByName(stages.canonical.limit(50))
+    val base = java.nio.file.Files.createTempDirectory("string-dup").toString
+    Materialize.writeGraph(spark, s"$base/a", dup, triplesDistinct = true, nBuckets = 4)
+    Materialize.writeGraph(spark, s"$base/b", dup, triplesDistinct = false, nBuckets = 4)
+    assertSameWarehouse(s"$base/a", s"$base/b")
+    assert(readBack(s"$base/a/edges").count() == stages.canonical.count())
+    for (w <- Seq("a", "b"); t <- Seq("nodes", "edges")) {
+      val marker = java.nio.file.Paths.get(base, w, t, "_graft_nbuckets")
+      assert(java.nio.file.Files.exists(marker), s"no bucket marker at $marker")
+      assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == "4")
+    }
   }
 
   test("the fused dedup rides the aligned exchange — no shuffle on the dedup keys") {
-    val plan = Materialize.alignedDedup(stages.canonicalCompact, 8, 2)
+    val plan = Materialize.alignedDedupCoded(stages.canonicalCompact, 8, 2)
       .queryExecution.executedPlan.toString
     // exactly one write-aligned exchange on (bucket, _sub) ...
     val aligned = plan.linesIterator
@@ -94,7 +114,7 @@ class FusedWriteSpec extends SparkSpec {
     // the dedup aggregate keys over the exchange are the CODED columns:
     // (_pc, a, b, bucket, _sub) — the pred/prefix strings exist only in the
     // post-dedup decode projection, so they never cross the shuffle
-    val plan = Materialize.alignedDedup(stages.canonicalCompact, 8, 2)
+    val plan = Materialize.alignedDedupCoded(stages.canonicalCompact, 8, 2)
       .queryExecution.executedPlan.toString
     val aggKeys = plan.linesIterator
       .filter(_.contains("HashAggregate(keys=["))

@@ -14,7 +14,11 @@ class PrecisionRecallSpec extends SparkSpec {
       .map(r => RowOracle.T(r.getString(0), r.getInt(1), r.getString(2))).toSeq
     val expected = RowOracle.canonicalTriples(collected)
 
-    val got = Pipeline.build(spark, turnsDf).canonical.collect()
+    val canonical = Pipeline.build(spark, turnsDf).canonical
+    // the Set below would hide duplicate rows: the canonical set is a set
+    val n = canonical.count()
+    assert(n == canonical.distinct().count(), s"duplicate canonical rows among $n")
+    val got = canonical.collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
 
     val inter = got.intersect(expected)
