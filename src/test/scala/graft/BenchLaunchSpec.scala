@@ -133,4 +133,19 @@ class BenchLaunchSpec extends AnyFunSuite {
       Seq("graft.BenchChild", "spark://127.0.0.1:7177", "4", "/a", "/b", "3",
         "612.346"))
   }
+
+  test("a child JVM that fails raises an error naming its exit code and " +
+      "its stderr tail") {
+    val cpus = Files.readString(Paths.get("/proc/self/status")).linesIterator
+      .collectFirst { case l if l.startsWith("Cpus_allowed_list:") =>
+        Bench.parseCpuList(l.stripPrefix("Cpus_allowed_list:")) }
+      .getOrElse(Seq(0))
+    val real = Bench.Launcher(s"${System.getProperty("java.home")}/bin/java",
+      System.getProperty("java.class.path"))
+    val e = intercept[IllegalArgumentException](Bench.runJvm("missing main",
+      real.argv(cpus.head.toString, opens = false, Nil, "graft.NoSuchMain", Nil)))
+    assert(e.getMessage.contains("missing main failed rc=1"), e.getMessage)
+    assert(e.getMessage.contains("Could not find or load main class graft.NoSuchMain"),
+      e.getMessage)
+  }
 }

@@ -106,9 +106,11 @@ class BenchPolicySpec extends AnyFunSuite {
     Bench.LedgerPair(run, ts, "test", proto, clockEq, pairSamples, cpus,
       triples, lo, hi, clock, membw, ctrlPre, ctrlPost)
 
+  private val thresholds = Bench.Thresholds(ctrlMin = 0.93, clockLo = 0.95,
+    clockHi = 1.15, membwLo = 0.80, membwHi = 1.30, floorTol = 1.12)
+
   private def qual(ps: Seq[Bench.LedgerPair]) =
-    Bench.ledgerQualified(ps, ctrlMin = 0.93, clockLo = 0.95, clockHi = 1.15,
-      membwLo = 0.80, membwHi = 1.30, floorTol = 1.12)
+    Bench.ledgerQualified(ps, thresholds)
 
   test("ledger line round-trips through the parser") {
     val p = lp("run-1", 321.5, 99.25, clock = 1.05, membw = 0.95, ts = 42L)
@@ -211,6 +213,32 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(Bench.median(Nil) == 0.0)
   }
 
+  test("median of an even number of sides averages the two middle sides' " +
+      "medians, stage maps and probe readings; min/max span all sides") {
+    def side(med: Double, min: Double, max: Double, alu: Double, mem: Double,
+        unspun: Double) = Bench.LevelResult(4, 1577L, min, max,
+      Map("total_sec" -> med, "graph_write_sec" -> med / 2), alu, mem, unspun)
+    val sides = Seq(side(30, 29, 31, 600, 500, 650), side(10, 9, 12, 700, 520, 720),
+      side(20, 18, 25, 650, 510, 690), side(40, 35, 60, 550, 480, 600))
+    val m = Bench.medianOf(sides) // middle sides: medianSec 20 and 30
+    assert(m.medianSec == 25.0)
+    assert(m.medianStages == Map("total_sec" -> 25.0, "graph_write_sec" -> 12.5))
+    assert(m.aluMops == 625.0 && m.memMlongs == 505.0 && m.aluUnspun == 670.0)
+    assert(m.minSec == 9.0 && m.maxSec == 60.0)
+    val odd = Bench.medianOf(sides.take(3)) // the middle side itself
+    assert(odd.medianSec == 20.0 && odd.aluMops == 650.0 && odd.aluUnspun == 690.0)
+    assert(odd.minSec == 9.0 && odd.maxSec == 31.0)
+  }
+
+  test("qualification constants are the record runs' thresholds; the wide " +
+      "clock band applies only to unequalized runs") {
+    assert(Bench.thresholds(equalized = true) ==
+      Bench.Thresholds(0.93, 0.95, 1.15, 0.80, 1.30, 1.12))
+    assert(Bench.thresholds(equalized = false) ==
+      Bench.Thresholds(0.93, 0.92, 1.35, 0.80, 1.30, 1.12))
+    assert(Bench.PairSamples == 2 && Bench.AbortX == 3.0)
+  }
+
   test("ledger numbers format locale-independently (ROOT decimal point)") {
     assert(Bench.d4(321.6166) == "321.6166")
     // no comma-decimal token anywhere (field separators are quote-adjacent)
@@ -237,9 +265,7 @@ class BenchPolicySpec extends AnyFunSuite {
       java.nio.file.Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
       val (loaded, qual) = Bench.ledgerUnion(f, enabled = true,
         Bench.MeasuredPathVersion, clockEq = true, pairSamples = 2, cpus = 32,
-        triples = 17108704L, excludeRun = "run-live", ctrlMin = 0.93,
-        clockLo = 0.95, clockHi = 1.15, membwLo = 0.80, membwHi = 1.30,
-        floorTol = 1.12)
+        triples = 17108704L, excludeRun = "run-live", thresholds)
       assert(loaded.toSet == Set(good1, good2))
       assert(qual.toSet == Set(good1, good2))
       // the snapshot headline over the union is the TRUE median
@@ -252,9 +278,30 @@ class BenchPolicySpec extends AnyFunSuite {
     val missing = java.nio.file.Paths.get("/tmp/graft-no-such-ledger.jsonl")
     assert(Bench.ledgerUnion(missing, enabled = true,
       Bench.MeasuredPathVersion, clockEq = true, pairSamples = 2, cpus = 32,
-      triples = 1L, excludeRun = "x", ctrlMin = 0.93, clockLo = 0.95,
-      clockHi = 1.15, membwLo = 0.80, membwHi = 1.30,
-      floorTol = 1.12) == ((Nil, Nil)))
+      triples = 1L, excludeRun = "x", thresholds) == ((Nil, Nil)))
+  }
+
+  test("summary: in-run headline over the qualified pairs, all-pairs over " +
+      "every pair, union headline adds the ledger's qualified pairs") {
+    val clean = lp("run-now", 200.0, 62.0) // wall 0.8065
+    val dirty = lp("run-now", 201.0, 62.5, clock = 1.31) // wall 0.8040
+    val slow = lp("run-now", 300.0, 100.0) // wall 0.75, over both floors
+    val hist = Seq(lp("run-old", 250.0, 80.0), lp("run-old", 251.0, 81.0))
+    val s = Bench.Summary(Seq(clean, dirty, slow), thresholds, hist,
+      Bench.ledgerQualified(hist, thresholds))
+    assert(s.quals == Seq(true, false, false))
+    assert(s.inRun == clean.wall)
+    assert(s.union == Seq(clean.wall) ++ hist.map(_.wall))
+    assert(s.headline == Bench.median(s.union))
+    val k = s.keys.toMap
+    assert(k("scaling_efficiency_all_pairs") == dirty.wall)
+    assert(k("qualified_pairs") == 1.0 && k("qualified_pairs_union") == 3.0)
+    assert(k("ledger_pairs_loaded") == 2.0 && k("ledger_pairs_qualified") == 2.0)
+    assert(k("qual_pair1") == 1.0 && k("qual_pair2") == 0.0 && k("qual_pair3") == 0.0)
+    // nothing qualified anywhere: every headline falls back to all pairs
+    val none = Bench.Summary(Seq(dirty, slow), thresholds, Nil, Nil)
+    assert(none.inRun == none.headline &&
+      none.headline == Bench.median(Seq(dirty.wall, slow.wall)))
   }
 
   test("stray-bench sweep selects other Bench/BenchChild JVMs, never " +

@@ -15,15 +15,11 @@ class EnvKnobSpec extends AnyFunSuite {
     "SPARK_GRAFT_BENCH_REPL", "SPARK_GRAFT_BENCH_RUNS",
     "SPARK_GRAFT_CHILD_MEM", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_CTRL_ROWS",
     "SPARK_GRAFT_CTRL_RUNS", "SPARK_GRAFT_DRIVER_CORE",
-    "SPARK_GRAFT_EQ_CLOCK", "SPARK_GRAFT_EST_PAIR_SEC",
-    "SPARK_GRAFT_EXEC_MEM", "SPARK_GRAFT_HI_RESERVE_MIN",
-    "SPARK_GRAFT_KILL_STRAY_BENCH", "SPARK_GRAFT_LEDGER",
-    "SPARK_GRAFT_MAX_ABORTS", "SPARK_GRAFT_MAX_PAIRS",
+    "SPARK_GRAFT_EST_PAIR_SEC", "SPARK_GRAFT_EXEC_MEM",
+    "SPARK_GRAFT_HI_RESERVE_MIN", "SPARK_GRAFT_KILL_STRAY_BENCH",
+    "SPARK_GRAFT_LEDGER", "SPARK_GRAFT_MAX_ABORTS", "SPARK_GRAFT_MAX_PAIRS",
     "SPARK_GRAFT_PAIR_BUDGET_MIN", "SPARK_GRAFT_PAIR_LEDGER",
-    "SPARK_GRAFT_PAIR_SAMPLES", "SPARK_GRAFT_PROBE_SLEEP_SEC",
-    "SPARK_GRAFT_QUAL_CLOCK", "SPARK_GRAFT_QUAL_CTRL",
-    "SPARK_GRAFT_QUAL_FLOOR_TOL", "SPARK_GRAFT_QUAL_MEMBW",
-    "SPARK_GRAFT_QUAL_PAIRS", "SPARK_GRAFT_RUN_ABORT_X",
+    "SPARK_GRAFT_PROBE_SLEEP_SEC", "SPARK_GRAFT_QUAL_PAIRS",
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_TOTAL_BUDGET_MIN",
     "SPARK_GRAFT_WORKER_MEM")
 
@@ -50,7 +46,7 @@ class EnvKnobSpec extends AnyFunSuite {
   }
 
   test("the variables read under src/main/scala are exactly the kept knobs") {
-    assert(Kept.size == 30 && Kept.distinct == Kept)
+    assert(Kept.size == 23 && Kept.distinct == Kept)
     val read = sources.flatMap { case (_, t) => EnvRead.findAllMatchIn(t).map(_.group(1)) }
     assert(read.distinct.sorted == Kept.sorted)
   }
