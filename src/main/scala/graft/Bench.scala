@@ -598,8 +598,12 @@ object Bench {
   // r06.1: checkpoint column pruning in the measured pipeline (ts dropped
   // from the wide mention form; kind dropped from the staged wide; score/
   // fractie_id dropped from the staged link output) — resident block bytes
-  // changed, so r05.1 history pairs are no longer protocol-identical
-  private[graft] val MeasuredPathVersion = "r06.1"
+  // changed, so r05.1 history pairs are no longer protocol-identical.
+  // r07.1: the link stage is planned once per build (zaak tiers inside the
+  // mention checkpoint, which gains their three columns; a driver-local
+  // person dictionary; a packed hash-aggregate argmax; votes from one join;
+  // CC's collect in the caller's session)
+  private[graft] val MeasuredPathVersion = "r07.1"
 
   /** Per-side measured runs of every pair; a side's time is their MIN. */
   private[graft] val PairSamples = 2

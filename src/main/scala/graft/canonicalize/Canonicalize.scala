@@ -34,10 +34,14 @@ object Canonicalize {
     * over ~10^5 edges and CC over 10^12 star edges whose answer is known.
     */
   def surfaceEdges(linkedPersons: DataFrame): DataFrame =
+    surfaceEdgeRows(linkedPersons).distinct()
+
+  /** `surfaceEdges` before its dedup: one row per linker row. */
+  private def surfaceEdgeRows(linkedPersons: DataFrame): DataFrame =
     linkedPersons.select(
       concat(lit("surface:"), lower(col("v_first")), lit("|"),
         lower(col("v_last"))).as("u"),
-      concat(lit("persoon:"), col("persoon_id")).as("v")).distinct()
+      concat(lit("persoon:"), col("persoon_id")).as("v"))
 
   /** `(node, component)` for every node incident to a match edge
     * (per-occurrence node space — small inputs / tests).
@@ -96,7 +100,9 @@ object Canonicalize {
   def persoonCanonWithFlag(linkedPersons: DataFrame,
       localMaxEdges: Int = 2000000): (DataFrame, Boolean) = {
     val spark = linkedPersons.sparkSession
-    val edges = surfaceEdges(linkedPersons)
+    // undeduplicated: both paths dedup globally first (the collect in a
+    // map-side-combined shuffle, the distributed loop in its first step)
+    val edges = surfaceEdgeRows(linkedPersons)
     ConnectedComponents.collectIfSmall(edges, localMaxEdges) match {
       case None =>
         val m = canonicalMap(ConnectedComponents.run(edges))

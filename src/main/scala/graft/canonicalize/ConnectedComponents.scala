@@ -1,6 +1,8 @@
 package graft.canonicalize
 
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Connected components over an edge DataFrame via alternating
@@ -49,29 +51,37 @@ object ConnectedComponents {
     */
   private[graft] def collectIfSmall(edges: DataFrame,
       localMaxEdges: Int): Option[Array[(String, String)]] = {
-    val spark = edges.sparkSession
     val e = edges.select(col("u").cast("string"), col("v").cast("string"))
       .where(col("u") =!= col("v"))
-      .distinct()
-    // ONE collect job: Spark's CollectLimit otherwise ramps up incrementally
-    // (1 → 4 → 16 → 64 partitions = 4 driver-serial jobs, ~2 s each measured,
-    // at EVERY cluster size — pure Amdahl). The post-distinct edge set is
-    // dimension-bounded, so reading all its partitions at once is the right
-    // plan; the limit stays as the driver-memory guard.
+    // ONE collect job over every partition at once: the edge set is
+    // dimension-bounded, and a `limit(n).collect()` would ramp up
+    // incrementally (1 → 4 → 16 → 64 partitions = 4 driver-serial jobs,
+    // ~2 s each measured, at EVERY cluster size — pure Amdahl). The dedup
+    // is global and comes first (an RDD shuffle with map-side combine,
+    // which adds no generated class to the build's codegen working set), so
+    // the partitions are disjoint and the driver-memory guard is the one a
+    // one-job `CollectLimit` has: each task ships at most
+    // `localMaxEdges + 1` edges, and the driver keeps results only until
+    // their union passes `localMaxEdges`.
     //
-    // The initialNumPartitions override is scoped to a THROWAWAY CLONED
-    // session (ADVICE r3): mutating the caller's session conf — even
-    // restored in a finally — races any concurrent query on the same
-    // session (AQE stage futures, parallel consumers) into running under
-    // the override. `newSession` shares the SparkContext but has isolated
-    // SQL conf; only the final collect executes there, over the lazily
-    // compiled RDD of the same plan (one job, early-stopping iterators).
-    val isolated = spark.newSession()
-    isolated.conf.set("spark.sql.limit.initialNumPartitions", "1000000")
-    val collected = isolated.createDataFrame(e.rdd, e.schema)
-      .limit(localMaxEdges + 1).collect()
-    if (collected.length > localMaxEdges) None
-    else Some(collected.map(r => (r.getString(0), r.getString(1))))
+    // It runs in the CALLER's session as a SQL execution of its own, like a
+    // Dataset action, and leaves the session conf as it is (ADVICE r3: a
+    // conf override, even one restored in a finally, races any concurrent
+    // query on the same session). Its tasks therefore load generated classes
+    // through the session's class loader — part of the codegen cache key —
+    // and reuse what the pipeline's other jobs compiled; a throwaway
+    // `newSession()` would run under a new loader and miss every entry.
+    val cap = localMaxEdges + 1
+    val kept = ArrayBuffer.empty[(String, String)]
+    val qe = e.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collectIfSmall")) {
+      val distinct = qe.toRdd.map(r => (r.getString(0), r.getString(1))).distinct()
+      distinct.sparkContext.runJob(distinct,
+        (it: Iterator[(String, String)]) => it.take(cap).toArray,
+        (_: Int, part: Array[(String, String)]) =>
+          if (kept.length <= localMaxEdges) kept ++= part: Unit)
+    }
+    if (kept.length > localMaxEdges) None else Some(kept.toArray)
   }
 
   /** Driver-side union-find with min-node component labels — semantics

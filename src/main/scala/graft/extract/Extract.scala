@@ -111,14 +111,16 @@ object Extract {
 
   /** Speaker view CARRYING the co-row case fields: the wide table is one
     * row per turn, so a turn's speaker mention and case mention are the
-    * same row — the pipeline zaak-links these columns in place (broadcast
-    * tiers) and threads them through the person-link argmax, making the
-    * DISCUSSES derivation join-free (Pipeline.build).
+    * same row — zaak-linking these columns (`Link.zaakEntityCarry`) and
+    * threading them through the person-link argmax makes the DISCUSSES
+    * derivation join-free. `Pipeline.build` now zaak-links the whole wide
+    * table once, before its checkpoint, and reads the speaker rows off it;
+    * this view serves compositions that link the speaker rows on their own
+    * (the benchmark's per-layer build).
     */
   def speakersWithCaseFrom(wide: DataFrame): DataFrame =
-    // pipeline-only view (the link stage drops everything but the mention
-    // key + carry columns): `kind` is not selected, so the pipeline can
-    // stage a kind-less wide checkpoint (Pipeline.build)
+    // the link stage drops everything but the mention key + carry columns:
+    // `kind` is not selected, so a kind-less wide checkpoint suffices
     wide.where(col("is_speaker"))
       .select(col("conv_id"), col("turn_idx"),
         col("v_first"), col("v_last"),

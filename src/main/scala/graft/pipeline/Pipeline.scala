@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.canonicalize.Canonicalize
 import graft.extract.Extract
 import graft.link.Link
@@ -71,17 +72,23 @@ object Pipeline {
     // checkpoint. Checkpoint blocks are re-scanned by every consumer, so
     // dead columns are resident memory-bus bytes multiplied by the scan
     // count — the per-node term that does not scale with cores.
-    val wide = stage(Extract.mentionsWide(turns).drop("kind"), "mentions")
-    // The wide table is one row per turn, so a turn's speaker and case
-    // mentions are the SAME row: zaak-link the case columns in place
-    // (broadcast tiers, no shuffle) and CARRY the result through the
-    // person-link argmax — the DISCUSSES triples then read the carried
-    // columns instead of re-joining linkedPersons × linkedZaken on
-    // (conv_id, turn_idx) (two corpus exchanges saved per run).
-    val speakersZ = Link.zaakEntityCarry(Extract.speakersWithCaseFrom(wide),
-      Dict.zakenDf(spark), Dict.dossiersDf(spark), Dict.documentsDf(spark))
-      .drop("z_score")
-    val linkedRaw = Link.linkPersons(speakersZ, Dict.personsDf(spark),
+    //
+    // The zaak tiers run HERE, once per build, inside the checkpoint: the
+    // wide table is one row per turn, so a turn's speaker and case mentions
+    // are the SAME row and both views below read the same carried
+    // `z_entity_id` / `z_score` / `z_match_type` (broadcast tiers, no
+    // shuffle). Speaker-only rows have a null `dossier_nr` and carry
+    // (null, 0, NO_MATCH), as the per-view cascade gave them.
+    val wide = stage(Link.zaakEntityCarry(Extract.mentionsWide(turns).drop("kind"),
+      Dict.zakenDf(spark), Dict.dossiersDf(spark), Dict.documentsDf(spark)),
+      "mentions")
+    // The carried zaak link rides through the person-link argmax, so the
+    // DISCUSSES triples read the carried columns instead of re-joining
+    // linkedPersons × linkedZaken on (conv_id, turn_idx) (two corpus
+    // exchanges saved per run).
+    val speakers = wide.where(col("is_speaker"))
+      .select("conv_id", "turn_idx", "v_first", "v_last", "z_entity_id", "z_match_type")
+    val linkedRaw = Link.linkPersons(speakers, Dict.personsDf(spark),
       carry = Seq("z_entity_id", "z_match_type"))
     // Same pruning for the linked checkpoint: `score` and `fractie_id` are
     // dead past the link stage (triples build MEMBER_OF from the persons
@@ -89,8 +96,8 @@ object Pipeline {
     // read match_type) — they were checkpointed and re-scanned 3× per run.
     val linkedPersons = stage(linkedRaw.drop("score", "fractie_id"),
       "linked_persons")
-    val linkedZaken = Link.linkZaken(Extract.casesFrom(wide),
-      Dict.zakenDf(spark), Dict.dossiersDf(spark), Dict.documentsDf(spark))
+    // the case view is a projection of the carried columns: no zaak join
+    val linkedZaken = Link.carriedZaken(wide.where(col("is_case")))
     val votes = Extract.votesFrom(wide)
     val triples = Triples.all(linkedPersons, linkedZaken, votes,
       Dict.personsDf(spark), Dict.fractiesDf(spark))

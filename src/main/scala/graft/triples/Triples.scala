@@ -55,19 +55,25 @@ object Triples {
 
   /** Vote triples: synthetic vote node per utterance, fractie resolved by
     * name (J12 — reference vlos_neo4j_loader.py:536-540). `fracties` is a
-    * broadcast dim.
+    * broadcast dim. Both predicates come from ONE join and one scan of the
+    * vote rows: each joined row emits its two triples through an exploded
+    * two-struct array (a union of two branches plans the join twice).
     */
   def votes(voteMentions: DataFrame, fracties: DataFrame): DataFrame = {
-    val withId = voteMentions
+    val voteKey = concat(lit("vote:"), TextFunctions.stableId(
+      col("conv_id"), col("turn_idx"), col("fractie_naam"), col("vote_norm")))
+    // ≤1 vote mention per turn and the vote key embeds (conv, turn, naam,
+    // vote) — both predicates unique by construction
+    voteMentions
       .join(broadcast(fracties.select(col("naam"), col("fractie_id"))),
         voteMentions("fractie_naam") === col("naam"))
-      .withColumn("vote_key", concat(lit("vote:"), TextFunctions.stableId(
-        col("conv_id"), col("turn_idx"), col("fractie_naam"), col("vote_norm"))))
-    // ≤1 vote mention per turn and the vote key embeds (conv, turn, naam,
-    // vote) — both branches unique by construction
-    triRaw(convKey, Pred.HasFractieVote, col("vote_key"))(withId)
-      .unionByName(
-        triRaw(col("vote_key"), Pred.CastByFractie, concat(lit(F), col("fractie_id")))(withId))
+      .withColumn("vote_key", voteKey)
+      .select(explode(array(
+        struct(convKey.as("subj"), lit(Pred.HasFractieVote).as("pred"),
+          col("vote_key").as("obj")),
+        struct(col("vote_key").as("subj"), lit(Pred.CastByFractie).as("pred"),
+          concat(lit(F), col("fractie_id")).as("obj")))).as("t"))
+      .select(col("t.subj").as("subj"), col("t.pred").as("pred"), col("t.obj").as("obj"))
   }
 
   /** The raw (pred, a, b) branch union in COMPACT ID SPACE, pre-dedup —

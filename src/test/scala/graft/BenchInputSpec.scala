@@ -12,7 +12,7 @@ import scala.reflect.io.Directory
   */
 class BenchInputSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = SparkSpec.testdata("sf0.001")
 
   test("ensureInput survives external rm -rf of the bench input: " +
       "detects the missing table and rebuilds it deterministically") {

@@ -42,7 +42,7 @@ class BenchReplaySpec extends AnyFunSuite {
     try {
       Files.write(f, ledger.filter(p => millis(p.run) < millis(run))
         .map(Bench.ledgerLine).asJava)
-      Bench.ledgerUnion(f, enabled = true, Bench.MeasuredPathVersion,
+      Bench.ledgerUnion(f, enabled = true, "r06.1",
         clockEq = true, Bench.PairSamples, cpus = 32, triples = 17108704L,
         excludeRun = run, t)
     } finally Files.deleteIfExists(f)
@@ -50,7 +50,7 @@ class BenchReplaySpec extends AnyFunSuite {
 
   test("the default ledger holds only the mergeable r06.1 rows, each as " +
       "ledgerLine writes it; the r05.1 rows are archived") {
-    assert(ledger.size == 21 && ledger.forall(_.proto == Bench.MeasuredPathVersion))
+    assert(ledger.size == 21 && ledger.forall(_.proto == "r06.1"))
     assert(ledger.map(Bench.ledgerLine) == lines(Ledger))
     val archived = lines(Archive).flatMap(Bench.parseLedgerLine)
     assert(archived.size == 38 && archived.forall(_.proto == "r05.1"))

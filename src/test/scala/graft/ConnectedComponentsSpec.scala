@@ -168,4 +168,62 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(canon("persoon:P3") == "persoon:P2") // merged via shared mention
     assert(canon.count { case (n, c) => n.startsWith("mention:") && c == "persoon:P1" } == 2)
   }
+
+  /** `body`'s value and the serialized bytes its result tasks sent the
+    * driver (jobs run under a job group of their own). */
+  private def resultBytes[T](body: => T): (T, Long) = {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val (group, marker) = (s"result-bytes-${System.nanoTime}", s"marker-${System.nanoTime}")
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new AtomicLong
+    val markerEnded = new CountDownLatch(1)
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => j.stageIds.foreach(stages.add)
+          case Some(`marker`) => markerJobs.add(j.jobId)
+          case _ =>
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskType == "ResultTask" && t.taskMetrics != null)
+          bytes.addAndGet(t.taskMetrics.resultSize)
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(j.jobId)) markerEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val value = try body finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the marker job's end
+      // arrives, every event of `body`'s jobs has been seen
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerEnded.await(60, TimeUnit.SECONDS))
+      (value, bytes.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("collectIfSmall ships each distinct edge once, however many partitions repeat it") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val (k, parts) = (500, 16)
+    // `copies` = 1: the k edges spread over the partitions; `copies` = parts:
+    // every partition holds all k edges, as hot surfaces repeat per partition
+    def edges(copies: Int) = spark.range(0, copies.toLong * k, 1, parts).select(
+      concat(lit("surface:first-name|last-name-"), (col("id") % k).cast("string")).as("u"),
+      concat(lit("persoon:persoon-identifier-"), (col("id") % k).cast("string")).as("v"))
+    val (once, onceBytes) = resultBytes(ConnectedComponents.collectIfSmall(edges(1), k))
+    val (repeated, repeatedBytes) =
+      resultBytes(ConnectedComponents.collectIfSmall(edges(parts), k))
+    assert(once.map(_.toSet) == repeated.map(_.toSet) && once.exists(_.length == k))
+    assert(repeatedBytes < 2 * onceBytes,
+      s"$repeatedBytes result bytes for repeated edges vs $onceBytes for distinct ones")
+    // over the cap: None, and each edge still reaches the driver at most once
+    val (over, overBytes) = resultBytes(ConnectedComponents.collectIfSmall(edges(parts), 100))
+    assert(over.isEmpty)
+    assert(overBytes < 2 * onceBytes, s"$overBytes result bytes over the cap vs $onceBytes")
+  }
 }

@@ -34,7 +34,7 @@ class FusedWriteSpec extends SparkSpec {
   }
 
   private lazy val stages: Pipeline.Stages = {
-    val turns = TranscriptGen.transcripts(spark, "/root/testdata/sf0.001")
+    val turns = TranscriptGen.transcripts(spark, SparkSpec.testdata("sf0.001"))
     Pipeline.build(spark, turns)
   }
 

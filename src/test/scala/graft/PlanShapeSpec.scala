@@ -1,7 +1,10 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.extract.Extract
 import graft.link.Link
 import graft.synth.Dict
@@ -13,7 +16,10 @@ import graft.synth.Dict
   *    scan (column pruning reaches `ReadSchema`);
   *  - person linking is broadcast-only on the fact side: both the exact
   *    block join and the contains fallback broadcast the dimension, and no
-  *    corpus-sized sort-merge join or fact-side exchange appears.
+  *    corpus-sized sort-merge join or fact-side exchange appears;
+  *  - `Pipeline.build` plans each dimension lookup once: the zaak tiers
+  *    only inside the mention checkpoint, the argmax as a hash aggregate
+  *    with no sort or explode, the fracties join once.
   *
   * Complements MaterializeCheckpointSpec's PartitionFilters assertion on
   * the upsert read path. The last three tests pin the round-6 plan wins
@@ -74,6 +80,80 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("Broadcast"), s"no broadcast join in canonical plan:\n$p")
     assert(!p.contains("SortMergeJoin"), s"sort-merge join in canonical plan:\n$p")
     assert(!p.contains("ShuffledHashJoin"), s"shuffled join in canonical plan:\n$p")
+  }
+
+  /** Executed plans of the `n` local checkpoints `body` materializes, in
+    * the order they ran (the listener bus delivers them asynchronously).
+    */
+  private def checkpointPlans(n: Int)(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") seen.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (seen.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.size == n, s"expected $n checkpoint plans, saw ${seen.size}")
+    seen.asScala.toSeq
+  }
+
+  /** An adaptive plan's final plan (its initial plan repeats every node). */
+  private def finalPlan(p: String): String = p.split("== Initial Plan ==").head
+
+  /** Operator names of a plan tree string, codegen stage ids stripped. */
+  private def ops(p: String): Seq[String] =
+    finalPlan(p).linesIterator
+      .map(_.replaceFirst("^[ :+\\-]*(\\*\\(\\d+\\) )?", ""))
+      .map(_.takeWhile(_.isLetterOrDigit)).toSeq
+
+  /** Broadcast joins on any of the zaak tiers' dimension keys. */
+  private def zaakTierJoins(p: String): Int = {
+    val tierKey = "\\b(z_dnr|d_dnr|doc_dnr)#".r
+    finalPlan(p).linesIterator.count(l =>
+      l.contains("BroadcastHashJoin") && tierKey.findFirstIn(l).nonEmpty)
+  }
+
+  /** (mention checkpoint, linked-persons checkpoint, compact triples)
+    * executed plans of one `Pipeline.build` over the generator corpus.
+    */
+  private lazy val buildPlans: (String, String, String) = {
+    val turns = graft.synth.TranscriptGen.transcripts(spark, SparkSpec.testdata("sf0.001"))
+    var stages: graft.pipeline.Pipeline.Stages = null
+    val Seq(mentions, linked) = checkpointPlans(2) {
+      stages = graft.pipeline.Pipeline.build(spark, turns)
+    }
+    (mentions, linked, plan(stages.canonicalCompact))
+  }
+
+  test("Pipeline.build's linked-persons plan: hash-aggregate argmax, no Sort, " +
+      "SortAggregate or Generate") {
+    val (_, p, _) = buildPlans
+    val linkOps = ops(p)
+    Seq("Sort", "SortAggregate", "Generate").foreach { op =>
+      assert(!linkOps.contains(op), s"$op in the link plan:\n$p")
+    }
+    assert(finalPlan(p).linesIterator.exists(l =>
+      l.contains("HashAggregate") && !l.contains("SortAggregate") && l.contains("max(")),
+      s"argmax is not a hash aggregate:\n$p")
+  }
+
+  test("Pipeline.build joins the zaak tiers only in the mention checkpoint") {
+    val (mentions, linked, compact) = buildPlans
+    assert(zaakTierJoins(mentions) == 3, s"mention checkpoint plan:\n$mentions")
+    assert(zaakTierJoins(linked) == 0, s"zaak tier in the link plan:\n$linked")
+    assert(zaakTierJoins(compact) == 0, s"zaak tier in the compact plan:\n$compact")
+  }
+
+  test("Pipeline.build's compact-triple plan joins fracties once") {
+    val (_, _, p) = buildPlans
+    val joins = p.linesIterator
+      .count(l => l.contains("BroadcastHashJoin") && l.contains("fractie_naam"))
+    assert(joins == 1, s"$joins fracties joins in the compact plan:\n$p")
   }
 
   /** Operator nodes named `op` in an executedPlan tree string. */

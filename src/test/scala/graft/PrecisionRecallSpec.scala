@@ -9,7 +9,7 @@ import graft.synth.TranscriptGen
 class PrecisionRecallSpec extends SparkSpec {
 
   test("canonical triples match the row-at-a-time oracle with P = R = 1.0") {
-    val turnsDf = TranscriptGen.transcripts(spark, "/root/testdata/sf0.001")
+    val turnsDf = TranscriptGen.transcripts(spark, SparkSpec.testdata("sf0.001"))
     val collected = turnsDf.select("conv_id", "turn_idx", "text").collect()
       .map(r => RowOracle.T(r.getString(0), r.getInt(1), r.getString(2))).toSeq
     val expected = RowOracle.canonicalTriples(collected)

@@ -10,6 +10,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+
+  /** The generated test corpus of scale factor `sf` (TESTDATA.md). */
+  def testdata(sf: String): String =
+    java.nio.file.Paths.get(sys.props("user.home"), "testdata", sf).toString
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
